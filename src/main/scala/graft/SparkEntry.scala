@@ -516,8 +516,9 @@ object SparkEntry {
       .orderBy("q_id", "rank")
 
   /** TOA5 codec round-trip (S1/S4/K1/K2/D6): hourly event means ->
-    * TOA5 file on disk -> codec read-back. Hash-matching the direct
-    * aggregation oracle proves the codec is value-stable end-to-end. */
+    * TOA5 file on disk -> `format("toa5")` read-back. Hash-matching the
+    * direct aggregation oracle proves the codec is value-stable
+    * end-to-end. */
   private def q34(s: SparkSession, dir: String): DataFrame = {
     import graft.core.{FileInfo, TableMeta, VariableMeta}
     val agg = t(s, dir, "events")
@@ -551,7 +552,7 @@ object SparkEntry {
 
   /** S8 TOB1 binary round-trip: events encoded to a TOB1 file
     * (1990-epoch SECONDS/NANOSECONDS + IEEE4 value), decoded back by
-    * the distributed binary source; hash-matches the plain projection
+    * the `format("tob")` scan; hash-matches the plain projection
     * oracle iff timestamps and float payloads survive bit-exactly. */
   /** TOB1 roundtrip fixtures are single logger files written by the
     * (local) codec, so the event slice necessarily passes through the

@@ -135,12 +135,4 @@ object FastData {
     projected.select("__w").distinct().orderBy("__w").collect()
       .map(r => shardName(r.getTimestamp(0), prefix)).toSeq
   }
-
-  /** Integer-preserving downcast check (D8): true when every non-null
-    * value of the column is integral (within 1e-9), i.e. safe to write
-    * as int (reference: fast_file_io.py:615-619). */
-  def isIntegral(df: DataFrame, colName: String): Boolean = {
-    val r = df.agg(max(abs(col(colName) - round(col(colName))))).head()
-    r.isNullAt(0) || r.getDouble(0) < 1e-9
-  }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{FileFormat, FileInfo, TableMeta, VariableMeta}
+import graft.sources.v2.Toa5V2
 
 /** TOA5 / EddyPro codec.
   *
@@ -19,13 +20,15 @@ import graft.core.{FileFormat, FileInfo, TableMeta, VariableMeta}
   * a DATETIME timestamp built from the file's time columns; bad rows
   * dropped; sort by time.
   *
-  * Spark-first design: the header block is probed driver-side (a few
-  * hundred bytes, no job), producing a `StructType` + [[TableMeta]];
-  * the body scans distributedly via `spark.read.text` + `from_csv`
-  * with the computed schema, filtering the header lines by literal
-  * equality (cheap, exact, and works for multi-file globs where every
-  * file repeats the same header — cross-file header equality is
-  * enforced first, reference D7: code/utils/fast_file_io.py:294-341).
+  * The header block is probed driver-side (a few hundred bytes, no
+  * job), producing a `StructType` + [[TableMeta]]. Rows come from one
+  * place only: the `format("toa5")` DataSource V2 reader
+  * ([[graft.sources.v2.Toa5DataSource]]), which applies the parse
+  * rules above per file and fails on a file whose variable names
+  * differ from the probed header (reference D7:
+  * code/utils/fast_file_io.py:294-341), and reads local or
+  * shared-mount paths only. This object adds the header-derived
+  * catalog and the byte-stable writers.
   */
 object Toa5 {
 
@@ -66,15 +69,17 @@ object Toa5 {
   }
 
   /** Schema: declared non-numeric columns are strings, all else double
-    * (D3 numeric coercion happens inside the csv parse: non-numeric
-    * garbage in a double column -> null under PERMISSIVE mode). */
+    * (D3: the reader turns the NA token, an empty or missing cell and
+    * non-numeric garbage in a double column into null). */
   def schemaFor(fmt: FileFormat, meta: TableMeta): StructType =
     StructType(meta.variableNames.map { n =>
       if (fmt.nonNumericCols.contains(n)) StructField(n, StringType)
       else StructField(n, DoubleType)
     })
 
-  /** Distributed scan of one file or a glob of header-identical files.
+  /** Distributed scan of one file, directory or glob of TOA5 or
+    * EddyPro files through `format("toa5")`, with the catalog of the
+    * first file's header.
     *
     * Produces the conditioned frame: DATETIME built (F27), unparseable
     * timestamps dropped (D4), value columns coerced (D3). Dedup/
@@ -82,48 +87,10 @@ object Toa5 {
     * separation as the reference's FileHandler vs file_io.
     */
   def read(spark: SparkSession, path: String): Parsed = {
-    val (fmt, header) = probeHeader(firstFileOf(path))
+    val (fmt, header) = probeHeader(Toa5V2.listFiles(path).head)
     val meta = parseHeader(fmt, header)
-    val schema = schemaFor(fmt, meta)
-    val opts = Map("sep" -> fmt.separator, "nullValue" -> fmt.naToken,
-      "mode" -> "PERMISSIVE")
-
-    val raw = spark.read.text(path)
-      .filter(!col("value").isin(header: _*))   // strip header lines
-      .filter(length(col("value")) > 0)
-    val parsed = raw.select(
-      from_csv(col("value"), schema, opts).as("r")).select("r.*")
-
-    val withTs = fmt.name match {
-      case "TOA5" =>
-        parsed.withColumn("DATETIME",  // D4: unparseable -> null -> drop
-          try_to_timestamp(col("TIMESTAMP"), lit("yyyy-MM-dd HH:mm:ss")))
-      case "EddyPro" =>
-        parsed.withColumn("DATETIME",
-          try_to_timestamp(concat_ws(" ", col("date"), col("time")),
-            lit("yyyy-MM-dd HH:mm")))
-      case other => throw new IllegalArgumentException(other)
-    }
-    Parsed(withTs.filter(col("DATETIME").isNotNull), meta)
-  }
-
-  /** D7 cross-file header equality: every file of a set must carry the
-    * same header block before concatenation. */
-  def assertHeadersEqual(paths: Seq[String]): Unit = {
-    val headers = paths.map(p => probeHeader(p)._2)
-    val first = headers.head
-    val bad = paths.zip(headers).collect {
-      case (p, h) if h != first => p }
-    require(bad.isEmpty,
-      s"header mismatch vs ${paths.head}: ${bad.mkString(", ")}")
-  }
-
-  private def firstFileOf(path: String): String = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq
-        .filter(f => !Files.isDirectory(f)).map(_.toString).sorted.head
-    else path
+    Parsed(spark.read.format("toa5").schema(Toa5V2.fullSchema(fmt, meta))
+      .load(path), meta)
   }
 
   /** K1/K2 writer: byte-stable single-file TOA5 output — header block

@@ -3,12 +3,12 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.functions.Fp2
+import graft.sources.v2.TobV2
 
 /** Campbell Scientific TOB1/TOB3 binary sources (S8/S9).
   *
@@ -31,10 +31,14 @@ import graft.functions.Fp2
   *    holding only `offset bytes / record size` records. Sub-record i
   *    timestamps at header.seconds + i*subStep + subScale*subseconds.
   *
-  * Scale shape: `spark.read.format("binaryFile")` gives one row per
-  * file; daily TOB3 files are <= a few hundred MB, so one file = one
-  * task and a site-month parallelizes across the cluster. Decode runs
-  * in executors via flatMap over the file bytes.
+  * Scale shape: the `format("tob")` DataSource V2 reader
+  * ([[graft.sources.v2.TobDataSource]]) is the only scan. It plans
+  * one partition per file; daily TOB3 files are <= a few hundred MB,
+  * so one file = one task and a site-month parallelizes across the
+  * cluster. The decoders below run inside its partition reader, which
+  * fails on a file whose channel names or types differ from the probed
+  * header. That source reads local or shared-mount paths only, not
+  * `hdfs://` or `s3a://`.
   */
 object Tob {
 
@@ -113,13 +117,19 @@ object Tob {
       names: Seq[String], units: Seq[String], sampling: Seq[String],
       types: Seq[String])
 
-  def parseHeader(bytes: Array[Byte]): (TobHeader, Int) = {
+  /** Header lines before the data: 5 for TOB1, 6 for TOB3, known from
+    * the file's first bytes. */
+  private[sources] def headerLineCount(bytes: Array[Byte]): Int = {
     val fmt = new String(bytes, 0, math.min(8, bytes.length),
       StandardCharsets.US_ASCII)
-    val nLines = if (fmt.startsWith("\"TOB1\"")) 5
-      else if (fmt.startsWith("\"TOB3\"")) 6
-      else throw new IllegalArgumentException(
-        s"not a TOB file: ${fmt.take(8)}")
+    if (fmt.startsWith("\"TOB1\"")) 5
+    else if (fmt.startsWith("\"TOB3\"")) 6
+    else throw new IllegalArgumentException(
+      s"not a TOB file: ${fmt.take(8)}")
+  }
+
+  def parseHeader(bytes: Array[Byte]): (TobHeader, Int) = {
+    val nLines = headerLineCount(bytes)
     var pos = 0; val lines = Seq.newBuilder[String]
     for (_ <- 0 until nLines) {
       val nl = bytes.indexOf('\n'.toByte, pos)
@@ -151,16 +161,11 @@ object Tob {
   // --- TOB1 -----------------------------------------------------------
 
   /** Decode one TOB1 file's bytes to rows of (DATETIME us, fields...).
-    * Leading SECONDS/NANOSECONDS channels collapse into the timestamp. */
-  def decodeTob1(bytes: Array[Byte]): (Seq[Row], TobHeader) = {
-    val (it, h) = decodeTob1Rows(bytes)
-    (it.toVector, h)
-  }
-
-  /** Streaming TOB1 decode: records are stored sequentially (no
-    * frame reordering exists in TOB1), so file order IS the
-    * contract order and the iterator never materializes the file's
-    * row set — O(one record) live memory per reader. */
+    * Leading SECONDS/NANOSECONDS channels collapse into the timestamp.
+    * Records are stored sequentially (no frame reordering exists in
+    * TOB1), so file order IS the contract order and the iterator never
+    * materializes the file's row set — O(one record) live memory per
+    * reader. */
   def decodeTob1Rows(bytes: Array[Byte]): (Iterator[Row], TobHeader) = {
     val (h, dataStart) = parseHeader(bytes)
     require(h.format == "TOB1", s"expected TOB1, got ${h.format}")
@@ -455,40 +460,11 @@ object Tob {
 
   final case class Parsed(data: DataFrame, meta: TableMeta)
 
-  /** Distributed read of a file/glob/directory of TOB files: one task
-    * per file via the binaryFile source, whole-file decode per task. */
+  /** Distributed read of a file/glob/directory of TOB files through
+    * `format("tob")`, with the catalog of the first file's header. */
   def read(spark: SparkSession, path: String): Parsed = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-    val probe = bin.select("content").head().getAs[Array[Byte]](0)
-    val (h, _) = parseHeader(probe)
-    val schema = sparkSchema(h)
-    // decode emits micros for DATETIME; swap in LongType during decode
-    val decodeSchema = StructType(
-      schema.fields.map(f => if (f.name == "DATETIME")
-        f.copy(dataType = LongType) else f))
-    implicit val enc: Encoder[Row] = Encoders.row(decodeSchema)
-
-    val isTob1 = h.format == "TOB1"
-    // Every file decodes under ITS OWN header (decodeTob1/3 parse it),
-    // but the frame's schema comes from the single probe file — a
-    // directory mixing formats or channel lists would mis-bind columns
-    // silently. Validate each file's header against the probe and
-    // fail loudly with the offending path.
-    val (pFormat, pNames, pTypes) = (h.format, h.names, h.types)
-    val decoded = bin.select("path", "content").flatMap { r =>
-      val path = r.getString(0)
-      val bytes = r.getAs[Array[Byte]](1)
-      val (fh, _) = parseHeader(bytes)
-      require(fh.format == pFormat && fh.names == pNames
-          && fh.types == pTypes,
-        s"TOB header mismatch in $path: format=${fh.format} " +
-        s"names=${fh.names} types=${fh.types} differ from probed " +
-        s"($pFormat/$pNames/$pTypes) — decode a homogeneous directory")
-      if (isTob1) decodeTob1(bytes)._1 else decodeTob3(bytes)._1
-    }
-    val df = decoded.withColumn("DATETIME",
-      timestamp_micros(col("DATETIME")))
-    Parsed(df, tableMeta(h))
+    val h = TobV2.probeHeader(path)
+    Parsed(spark.read.format("tob").schema(sparkSchema(h)).load(path),
+      tableMeta(h))
   }
 }

@@ -18,20 +18,30 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.FileFormat
+import graft.core.{FileFormat, TableMeta}
 import graft.sources.Toa5
 
-/** DataSource V2 for TOA5 logger files: `spark.read.format("toa5")
-  * .load(dir)`.
+/** DataSource V2 for TOA5 and EddyPro logger files:
+  * `spark.read.format("toa5").load(dir)`. It is the engine's only scan
+  * of these formats; [[graft.sources.Toa5.read]] wraps it with the
+  * header-derived catalog.
   *
-  * SURVEY §7.3's phase-2 item. What V2 buys over the codec path
-  * ([[graft.sources.Toa5.read]], which parses via `from_csv`):
+  * Row semantics (reference: code/file_handling/file_io.py:61-262):
+  * header lines skipped per format; declared non-numeric columns are
+  * strings, all else double, with the NA token, an empty cell,
+  * non-numeric garbage and cells missing from a short row all null
+  * (D3); DATETIME parsed from TIMESTAMP (TOA5) or date + time
+  * (EddyPro), rows with an unparseable or missing timestamp dropped
+  * (D4) — which also drops a header block repeated mid-file. Every
+  * file must list the variables of the first file's header (D7);
+  * otherwise the scan fails with `header mismatch in <path>` rather
+  * than bind columns by the wrong positions.
   *
-  *  - '''Column pruning into the parse''': `from_csv` materializes
-  *    every declared column regardless of projection; this reader
-  *    converts only the fields Catalyst asks for (ReadSchema), so a
-  *    2-column projection over a 200-column logger table does ~1% of
-  *    the conversion work.
+  * What the scan does beyond the row rules:
+  *
+  *  - '''Column pruning into the parse''': only the fields Catalyst
+  *    asks for (ReadSchema) are converted, so a 2-column projection
+  *    over a 200-column logger table does ~1% of the conversion work.
   *  - '''File-level time-range pruning''': TOA5 files are appended in
   *    time order, so first/mid/last row samples bound the file's
   *    span. DATETIME range filters prune whole files at planning time
@@ -49,10 +59,9 @@ import graft.sources.Toa5
   *  - '''One partition per file''': a site-year is hundreds of daily
   *    files — natural parallelism across executors with no shuffle.
   *
-  * Row semantics match the codec path: declared non-numeric columns
-  * are strings, all else double with bad cells -> null (D3); DATETIME
-  * parsed from TIMESTAMP, unparseable rows dropped (D4); header lines
-  * skipped per format. Reference: code/file_handling/file_io.py:61-262.
+  * Paths are local, or on a mount every executor shares: both logger
+  * sources list and read files with `java.nio`, not through a Hadoop
+  * FileSystem, so `hdfs://` or `s3a://` inputs are not readable.
   */
 class Toa5DataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "toa5"
@@ -128,18 +137,22 @@ private[v2] class Toa5ReaderFactory(fullSchema: StructType,
       partition.asInstanceOf[Toa5InputPartition].file, fullSchema, required)
 }
 
-/** Streams one file: skips the header block, splits each row, converts
-  * ONLY the required fields, drops rows with unparseable timestamps. */
+/** Streams one file: checks its header against the probed schema,
+  * skips the header block, splits each row, converts ONLY the required
+  * fields, drops rows with unparseable timestamps. */
 private[v2] class Toa5PartitionReader(file: String,
     fullSchema: StructType, required: StructType)
     extends PartitionReader[InternalRow] {
-  private val (fmt, tsSpec) = Toa5V2.tsSpecOf(file)
+  private val (fmt, names, tsSpec) = Toa5V2.tsSpecOf(file)
+  private val probed = fullSchema.fieldNames.toSeq.filter(_ != "DATETIME")
+  require(names == probed, s"${fmt.name} header mismatch in $file: " +
+    s"variables $names differ from probed $probed — read one table per scan")
   private val sep = Pattern.compile(Pattern.quote(fmt.separator))
-  // full-schema index of each required output column (DATETIME is
-  // derived: TIMESTAMP for TOA5, date+time for EddyPro)
+  // cell index of each required output column (DATETIME is derived:
+  // TIMESTAMP for TOA5, date+time for EddyPro)
   private val srcIdx: Array[Int] = required.fields.map {
     case f if f.name == "DATETIME" => -1
-    case f => fullSchema.fieldIndex(f.name)
+    case f => names.indexOf(f.name)
   }
   private val reader = Files.newBufferedReader(
     Paths.get(file), StandardCharsets.UTF_8)
@@ -159,6 +172,7 @@ private[v2] class Toa5PartitionReader(file: String,
           while (i < srcIdx.length) {
             val si = srcIdx(i)
             if (si < 0) out.update(i, ts)
+            else if (si >= cells.length) out.update(i, null) // short row
             else {
               val raw = Toa5V2.unquote(cells(si))
               required.fields(i).dataType match {
@@ -187,24 +201,23 @@ private[v2] class Toa5PartitionReader(file: String,
 /** Pure helpers shared by planner and reader (unit-tested directly). */
 object Toa5V2 {
   val Unbounded: (Long, Long) = (Long.MinValue, Long.MaxValue)
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
-  /** Which cells carry the event time, and their joined pattern —
+  /** Which cells carry the event time, and how to parse them joined —
     * TOA5 has a TIMESTAMP column, EddyPro splits date and time. */
-  final case class TsSpec(idxs: Array[Int], pattern: String)
-      extends Serializable
+  final case class TsSpec(idxs: Array[Int], formatter: DateTimeFormatter)
 
-  def tsSpecOf(file: String): (FileFormat, TsSpec) = {
+  /** A file's format, variable names and timestamp cells, from its
+    * own header block. */
+  def tsSpecOf(file: String): (FileFormat, Seq[String], TsSpec) = {
     val (fmt, header) = Toa5.probeHeader(file)
     val names = Toa5.parseHeader(fmt, header).variableNames
-    fmt.name match {
-      case "TOA5" =>
-        (fmt, TsSpec(Array(names.indexOf("TIMESTAMP")), "yyyy-MM-dd HH:mm:ss"))
-      case "EddyPro" =>
-        (fmt, TsSpec(Array(names.indexOf("date"), names.indexOf("time")),
-          "yyyy-MM-dd HH:mm"))
+    val (cols, pattern) = fmt.name match {
+      case "TOA5" => (Seq("TIMESTAMP"), "yyyy-MM-dd HH:mm:ss")
+      case "EddyPro" => (Seq("date", "time"), "yyyy-MM-dd HH:mm")
       case other => throw new IllegalArgumentException(other)
     }
+    (fmt, names, TsSpec(cols.map(names.indexOf(_)).toArray,
+      DateTimeFormatter.ofPattern(pattern)))
   }
 
   /** Event-time micros of a split row, Long.MinValue if unparseable. */
@@ -212,13 +225,12 @@ object Toa5V2 {
     if (spec.idxs.exists(i => i < 0 || i >= cells.length))
       return Long.MinValue
     parseTsMicros(spec.idxs.map(i => unquote(cells(i))).mkString(" "),
-      spec.pattern)
+      spec.formatter)
   }
 
-  def parseTsMicros(s: String, pattern: String): Long =
+  def parseTsMicros(s: String, f: DateTimeFormatter): Long =
     try {
-      val ldt = LocalDateTime.parse(s,
-        DateTimeFormatter.ofPattern(pattern))
+      val ldt = LocalDateTime.parse(s, f)
       ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
         ldt.getNano / 1000L
     } catch { case _: Exception => Long.MinValue }
@@ -244,27 +256,20 @@ object Toa5V2 {
     else Seq(path)
   }
 
-  def formatOf(file: String): FileFormat = Toa5.probeHeader(file)._1
-
   def fullSchema(path: String): StructType = {
-    val first = listFiles(path).head
-    val (fmt, header) = Toa5.probeHeader(first)
-    val meta = Toa5.parseHeader(fmt, header)
-    Toa5.schemaFor(fmt, meta).add("DATETIME", TimestampType)
+    val (fmt, header) = Toa5.probeHeader(listFiles(path).head)
+    fullSchema(fmt, Toa5.parseHeader(fmt, header))
   }
+
+  /** The scan's columns for a probed header: its variables plus the
+    * derived DATETIME. */
+  def fullSchema(fmt: FileFormat, meta: TableMeta): StructType =
+    Toa5.schemaFor(fmt, meta).add("DATETIME", TimestampType)
 
   def unquote(s: String): String =
     if (s.length >= 2 && s.charAt(0) == '"' && s.charAt(s.length - 1) == '"')
       s.substring(1, s.length - 1)
     else s
-
-  /** Micros since epoch (UTC wall-clock), Long.MinValue if unparseable. */
-  def parseTsMicros(s: String): Long =
-    try {
-      val ldt = LocalDateTime.parse(s, tsFmt)
-      ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-        ldt.getNano / 1000L
-    } catch { case _: Exception => Long.MinValue }
 
   /** (lowerMicros, upperMicros) implied by a DATETIME filter, if any. */
   def tsBound(f: Filter): Option[(Long, Long)] = {
@@ -299,7 +304,7 @@ object Toa5V2 {
 
   def fileTimeSpan(file: String): Option[(Long, Long)] =
     try {
-      val (fmt, spec) = tsSpecOf(file)
+      val (fmt, _, spec) = tsSpecOf(file)
       val reader = Files.newBufferedReader(
         Paths.get(file), StandardCharsets.UTF_8)
       val firstData =

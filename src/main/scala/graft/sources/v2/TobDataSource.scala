@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import java.io.{BufferedInputStream, ByteArrayOutputStream}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,24 +16,27 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.Tob
 
 /** DataSource V2 for Campbell TOB1/TOB3 binary files:
-  * `spark.read.format("tob").load(dir)`.
+  * `spark.read.format("tob").load(dir)`. It is the engine's only scan
+  * of these formats; [[graft.sources.Tob.read]] wraps it with the
+  * header-derived catalog.
   *
   * SURVEY §7.3's second phase-2 item (the frame decoder inside a
-  * `PartitionReader`). Schema comes from a driver-side header probe of
-  * the first file (~4 KB); each file is one partition (a fast-data
+  * `PartitionReader`). Schema comes from a driver-side probe of the
+  * first file's header lines; each file is one partition (a fast-data
   * site-day is many daily files — parallelism with no shuffle); the
   * frame/record decode runs inside the partition reader, reusing the
   * tested [[graft.sources.Tob]] decoders (validation stamps, minor
   * frames, FP2 NaN -> null). Column pruning happens at row
   * materialization — fixed-width binary decode is IO-bound, so the
   * win is skipping per-cell conversion and row width, not bytes read.
+  * Paths are local or on a shared mount, as for `format("toa5")`.
   */
 class TobDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tob"
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TobV2.fullSchema(Toa5V2.pathOf(options))
+    Tob.sparkSchema(TobV2.probeHeader(Toa5V2.pathOf(options)))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
@@ -143,14 +147,23 @@ private[v2] class TobPartitionReader(file: String,
   override def close(): Unit = ()
 }
 
-private[v2] object TobV2 {
-  /** Driver-side probe: header lives in the first few hundred bytes. */
-  def fullSchema(path: String): StructType = {
+private[sources] object TobV2 {
+  /** Driver-side probe of the first file's header: its 5 (TOB1) or 6
+    * (TOB3) lines, however wide the channel list, and no data bytes. */
+  def probeHeader(path: String): Tob.TobHeader = {
     val first = Toa5V2.listFiles(path).head
-    val head = new Array[Byte](4096)
-    val in = Files.newInputStream(Paths.get(first))
-    val n = try in.readNBytes(head, 0, head.length) finally in.close()
-    val (h, _) = Tob.parseHeader(java.util.Arrays.copyOf(head, n))
-    Tob.sparkSchema(h)
+    val in = new BufferedInputStream(Files.newInputStream(Paths.get(first)))
+    try {
+      val head = new ByteArrayOutputStream()
+      var lines = 0; var want = 1; var b = 0
+      while (lines < want && { b = in.read(); b >= 0 }) {
+        head.write(b)
+        if (b == '\n') {
+          lines += 1
+          if (lines == 1) want = Tob.headerLineCount(head.toByteArray)
+        }
+      }
+      Tob.parseHeader(head.toByteArray)._1
+    } finally in.close()
   }
 }

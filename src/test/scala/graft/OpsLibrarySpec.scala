@@ -70,7 +70,7 @@ class OpsLibrarySpec extends SparkSpec {
     assert(out(1).getDouble(1) == 2.0)  // backup contributes new ts
   }
 
-  test("D7 assertHeadersEqual rejects mismatched file sets") {
+  test("D7 toa5 scan rejects a file with other header variables") {
     import java.nio.file.Files
     import java.nio.charset.StandardCharsets.UTF_8
     val dir = Files.createTempDirectory("hdr")
@@ -79,11 +79,12 @@ class OpsLibrarySpec extends SparkSpec {
     val h2 = h1.replace("\"A\"", "\"B\"")
     Files.write(dir.resolve("a.dat"), (h1 + "\"2024-01-01 00:30:00\",1\r\n").getBytes(UTF_8))
     Files.write(dir.resolve("b.dat"), (h2 + "\"2024-01-01 01:00:00\",2\r\n").getBytes(UTF_8))
-    val ex = intercept[IllegalArgumentException] {
-      graft.sources.Toa5.assertHeadersEqual(
-        Seq(dir.resolve("a.dat").toString, dir.resolve("b.dat").toString))
+    val ex = intercept[Exception] {
+      spark.read.format("toa5").load(dir.toString).count()
     }
-    assert(ex.getMessage.contains("b.dat"))
+    val msg = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).mkString(" ")
+    assert(msg.contains(s"header mismatch in ${dir.resolve("b.dat")}"))
   }
 
   test("bucketed tables join without a shuffle") {
