@@ -84,6 +84,11 @@ object Bench {
     m.replaceAll("[^A-Za-z0-9 ()@./_-]", " ")
   }
 
+  /** A failed rep's exception goes to stderr; stdout keeps the JSON lines. */
+  private def repFailed(name: String, rep: Int, e: Throwable): Unit =
+    System.err.println(
+      s"[bench] $name rep $rep failed: ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -135,10 +140,11 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => SparkEntry.benchExclude(name) }
       .map { case (name, fn) =>
-        val times = (1 to runs).map { _ =>
+        val times = (1 to runs).map { i =>
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() }
-          catch { case _: Throwable => failedQueries += name; -1L }
+          catch { case e: Throwable =>
+            repFailed(name, i, e); failedQueries += name; -1L }
           (System.nanoTime() - t0) / 1e9
         }.sorted
         name -> times
@@ -194,11 +200,11 @@ object Bench {
       // wall-time in the sample — a query that dies in 50 ms would
       // otherwise report a bogus tiny "converged" floor. Failed reps
       // are excluded; all-reps-failed reports the explicit -1 marker.
-      val reps = (1 to convergedReps).map { _ =>
+      val reps = (1 to convergedReps).map { i =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => repFailed(name, i, e); false }
         (ok, (System.nanoTime() - t0) / 1e9)
       }
       // drop the first two reps (plan codegen + JIT ramp), min the rest

@@ -8,7 +8,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *
   * The retrieval family's original shape — `row_number() OVER
   * (PARTITION BY q_id ORDER BY score)` then `rank <= k` — is exact,
-  * and (measured, r16 TopKShuffleProbe) NOT as bad as it reads:
+  * and (measured, BENCH_NOTES "Round 16: bounded top-k aggregate
+  * A/B at f100") NOT as bad as it reads:
   * Spark's `InferWindowGroupLimit` (3.5+) recognizes the
   * rank-then-filter pattern and inserts a partial
   * `WindowGroupLimit` BEFORE the exchange, so the window form

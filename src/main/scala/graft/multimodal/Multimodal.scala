@@ -795,15 +795,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Deterministic frame sampling for video-like payloads: take every
-    * `stride`-th chunk of `chunkBytes` as a pseudo-frame (stub for a
-    * real frame extractor; the explode shape is the real contract). */
-  def sampleChunks(df: DataFrame, chunkBytes: Int, stride: Int): DataFrame =
-    df.withColumn("chunk_idx",
-        explode(sequence(lit(0),
-          greatest(lit(0),
-            (length(col("payload")) / (chunkBytes * stride)).cast("int") - 1))))
-      .withColumn("chunk", expr(
-        s"substring(payload, chunk_idx * ${chunkBytes * stride} + 1, $chunkBytes)"))
 }

@@ -19,7 +19,6 @@ object TaskRegistry {
       enabled: Map[(String, String), Boolean]) {
 
     def siteList: Seq[String] = sites
-    def taskList: Seq[String] = tasks
 
     /** Sites with `task` enabled (disabled=true inverts, like the
       * reference's kwarg). */

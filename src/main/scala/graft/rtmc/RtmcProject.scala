@@ -307,8 +307,6 @@ final case class TimeEditor(project: RtmcProject, elem: Element)
   def setOffsetText(text: String): Unit =
     project.mustChild(elem, "time_offset_with_units")
       .setTextContent(text)
-  def offsetUnitsText: Option[String] =
-    project.child(elem, "time_offset_units").map(_.getTextContent)
   def setOffsetUnitsText(text: String): Unit =
     project.mustChild(elem, "time_offset_units").setTextContent(text)
 }
@@ -385,8 +383,6 @@ final case class WindRoseEditor(project: RtmcProject, elem: Element)
   def setWindDirColumn(text: String): Unit =
     project.mustChild(elem, "wind_direction_column_name")
       .setTextContent(text)
-  def windSpdColumn: Option[String] =
-    project.child(elem, "wind_speed_column_name").map(_.getTextContent)
   def setWindSpdColumn(text: String): Unit =
     project.mustChild(elem, "wind_speed_column_name")
       .setTextContent(text)
@@ -400,8 +396,6 @@ final case class FileSourceEditor(project: RtmcProject, elem: Element) {
   def setSourceFile(path: String): Unit =
     project.mustChild(elem, "settings").setAttribute("file-name", path)
   def sourceName: String = elem.getAttribute("name")
-  def setSourceName(name: String): Unit =
-    elem.setAttribute("name", name)
 }
 
 /** Project-level settings: snapshot output directory and per-screen

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -39,16 +39,4 @@ object IncrementalAppend {
       .start()
     q.awaitTermination()
   }
-
-  /** Windowed completeness monitor (streaming A5): per tumbling
-    * window, row counts vs expectation — the streaming analogue of the
-    * reference's gap stats, with watermark-bounded state. */
-  def windowedCounts(stream: DataFrame, tsCol: String,
-      windowLen: String, lateness: String): DataFrame =
-    stream
-      .withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen))
-      .agg(count(lit(1)).as("n_rows"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("n_rows"))
 }

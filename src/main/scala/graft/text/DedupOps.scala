@@ -365,18 +365,6 @@ object DedupOps {
         coalesce(col("__hit"), lit(false)).as("dup_against_ref"))
   }
 
-  /** Estimated MinHash Jaccard for given pairs: fraction of equal
-    * signature positions. `pairs` must have id_a/id_b columns. */
-  def minhashEstimate(pairs: DataFrame, sigs: DataFrame): DataFrame =
-    pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-        .hint("merge"), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-        .hint("merge"), "id_b")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), b => b)).cast("double") / size(col("sig_a")))
-
   /** Connected components over candidate pairs: every doc is labeled
     * with the minimum doc id reachable through the pair graph (its
     * dedup cluster's canonical id). Iterative min-label propagation
@@ -580,13 +568,6 @@ object DedupOps {
       relabeled.select(outCols :+ col("c").isNotNull.as("__labeled"): _*)
     else relabeled.select(outCols: _*)
   }
-
-  /** Canonical-document selection: keep the minimum-id doc of every
-    * dedup cluster (the standard "drop near-duplicates" step). */
-  def canonicalDocs(nodes: DataFrame, pairs: DataFrame): DataFrame =
-    connectedComponents(nodes, pairs)
-      .filter(col("id") === col("component"))
-      .select(col("id"))
 
   /** Benchmark-contamination detection: corpus documents sharing at
     * least `minShared` distinct k-shingles with any eval-set document

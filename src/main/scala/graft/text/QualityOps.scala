@@ -37,19 +37,6 @@ object QualityOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** All word n-grams of the normalized text (NON-distinct — counts
-    * are the point here, unlike [[TextOps.shingles]] which backs
-    * set-similarity and keeps a short-doc fallback). Docs with fewer
-    * than n tokens yield an empty array. */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n > 0, "n must be positive")
-    val tk = TextOps.tokens(text)
-    when(size(tk) >= n,
-      transform(sequence(lit(1), size(tk) - (n - 1)),
-        i => concat_ws(" ", slice(tk, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Per-document repetition report:
     *
     *   - `n_lines`        — token-line count ([[tokenLines]] width)

@@ -172,29 +172,6 @@ object TextOps {
     conv(substring(md5(concat(lit((seed / 4).toString), lit(":"), s)),
       1 + 8 * (seed % 4), 8), 16, 10).cast("long")
 
-  /** MinHash signature: for each of n seeds, min over the doc's
-    * distinct shingles of [[seededHash32Packed]] — the SAME seed
-    * family as [[DedupOps.minhashSignatures]], so array-form and
-    * relational-form signatures stay interchangeable. Returns
-    * array<long> length n. */
-  def minhashSignature(shingleArr: Column, n: Int): Column =
-    array((0 until n).map { i =>
-      array_min(transform(array_distinct(shingleArr),
-        s => seededHash32Packed(s, i)))
-    }: _*)
-
-  /** LSH band keys: split an n-length signature into bands of `rows`
-    * entries; band key = md5 of the joined band values (+ band index).
-    * Join docs on (band_idx, band_key) to get candidate pairs. */
-  def lshBandKeys(signature: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until rows).map(r =>
-            signature.getItem(b * rows + r).cast("string")): _*))
-          .as("key"))
-    }: _*)
-
   /** 16-bit SimHash over the token multiset: per token a 16-bit md5
     * hash; each bit position accumulates +1/-1; sign -> bit. Small
     * enough to oracle-check, same structure as the 64-bit variant. */

@@ -2,11 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Generic converged-floor probe — the Q54Probe methodology
-  * (VERDICT r16 ask #1) for ANY registry query: N warm in-JVM
-  * timings plus a Spark-job tally per rep, so a drifted bench
-  * reading can be split into (a) steady-state plan cost vs (b)
-  * first-touch/JIT noise, and a recomputed-aggregation chain (the
+/** Converged-floor probe for any registry query (VERDICT r16 ask
+  * #1): N warm in-JVM timings plus a Spark-job tally per rep, so a
+  * drifted bench reading can be split into (a) steady-state plan cost
+  * vs (b) first-touch/JIT noise, and a recomputed-aggregation chain (the
   * q54 defect class: job count far above the plan's natural action
   * count) is visible directly. Usage:
   * `runMain graft.tools.QueryProbe <sfDir> <reps> <query> [query…]`
@@ -16,9 +15,9 @@ object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(8)
-    val names =
-      if (args.length > 2) args.drop(2).toSeq
-      else Seq("q73_packed_blocks", "q61_l1_lifecycle")
+    val names = args.drop(2).toSeq
+    require(names.nonEmpty,
+      "usage: QueryProbe <sfDir> <reps> <query> [query…]")
     val b0 = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions",
@@ -58,7 +57,7 @@ object QueryProbe {
       }
       println(f"""{"probe":"$name%s","min":${times.min}%.3f,""" +
         f""""median":${times.sorted.apply(reps / 2)}%.3f,""" +
-        f""""converged_min":${times.drop(2).min}%.3f}""")
+        f""""converged_min":${times.drop(math.min(2, reps - 1)).min}%.3f}""")
     }
     spark.stop()
   }

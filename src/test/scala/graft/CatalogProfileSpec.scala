@@ -142,6 +142,19 @@ class CatalogProfileSpec extends SparkSpec {
       78.2, 15.6, 1.0).isEmpty)
   }
 
+  test("J8 scalar series broadcast across profile heights") {
+    val t0 = Timestamp.valueOf("2024-01-01 00:30:00")
+    val t1 = Timestamp.valueOf("2024-01-01 01:00:00")
+    val ps = Seq((t0, 98.1), (t1, 98.3)).toDF("DATETIME", "ps")
+    val out = ProfileOps.broadcastAcrossHeights(ps, Seq(0.5, 2.0, 8.0),
+      "DATETIME").orderBy("DATETIME", "height")
+    assert(out.columns.toSeq == Seq("DATETIME", "ps", "height"))
+    assert(out.collect().map(r =>
+      (r.getTimestamp(0), r.getDouble(1), r.getDouble(2))).toSeq == Seq(
+      (t0, 98.1, 0.5), (t0, 98.1, 2.0), (t0, 98.1, 8.0),
+      (t1, 98.3, 0.5), (t1, 98.3, 2.0), (t1, 98.3, 8.0)))
+  }
+
   test("A10/A11/W1 profile layer means, storage, strict flux sum") {
     val t0 = Timestamp.valueOf("2024-01-01 00:30:00")
     val t1 = Timestamp.valueOf("2024-01-01 01:00:00")

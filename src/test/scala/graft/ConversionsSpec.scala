@@ -70,4 +70,18 @@ class ConversionsSpec extends SparkSpec {
     val back = eval(co2MoleFractionFromDensity(lit(dens), lit(ps), lit(ta)))
     assert(math.abs(back - co2) < 1e-9)
   }
+
+  test("F10 diagnostic valid count -> invalid count") {
+    // n = freq_hz * step_min * 60 samples per averaging period
+    assert(eval(diagnosticValidToInvalid(lit(17950.0), 10.0, 30.0)) == 50.0)
+    assert(eval(diagnosticValidToInvalid(lit(36000.0), 20.0, 30.0)) == 0.0)
+    assert(eval(diagnosticValidToInvalid(lit(0.0), 10.0, 1.0)) == 600.0)
+  }
+
+  test("F21 ustar = sqrt(|tau| / rho)") {
+    assert(math.abs(eval(ustarFromTauRho(lit(0.2), lit(1.25))) - 0.4) < 1e-12)
+    // the sign of the momentum flux does not matter
+    assert(math.abs(eval(ustarFromTauRho(lit(-0.45), lit(1.25))) - 0.6) < 1e-12)
+    assert(eval(ustarFromTauRho(lit(0.0), lit(1.2))) == 0.0)
+  }
 }

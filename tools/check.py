@@ -4,9 +4,13 @@
 Runs graft.Verify at a given SF dir, then executes each oracle SQL in
 DuckDB over the same parquet tables and compares: schema (column names
 sorted), row count, and values (columns sorted by name, rows sorted,
-exact equality). Usage: python3 tools/check.py [sfdir] [outdir]
+exact equality). Fails when the oracle is empty or its names differ
+from the queries Verify ran (their output directories plus the
+verify_errors.json keys), so nothing passes unchecked; use a fresh
+outdir, since stale query directories count as run.
+Usage: python3 tools/check.py [sfdir] [outdir]
 """
-import json, subprocess, sys, glob, os
+import json, subprocess, sys, glob, os, re
 import duckdb
 import pandas as pd
 
@@ -35,6 +39,18 @@ oracle = json.load(open(f"{OUT}/oracle_sql.json"))
 verrs = {}
 if os.path.exists(f"{OUT}/verify_errors.json"):
     verrs = json.load(open(f"{OUT}/verify_errors.json"))
+if not oracle:
+    print(f"FAIL: {OUT}/oracle_sql.json has no entries"); sys.exit(1)
+ran = {d for d in os.listdir(OUT)
+       if re.fullmatch(r"q\d+_[a-z0-9_]+", d)
+       and os.path.isdir(os.path.join(OUT, d))} | set(verrs)
+if ran != set(oracle):
+    print("FAIL: oracle names differ from the queries Verify ran")
+    for n in sorted(set(oracle) - ran):
+        print(f"   oracle only: {n}")
+    for n in sorted(ran - set(oracle)):
+        print(f"   ran only:    {n}")
+    sys.exit(1)
 n_pass = n_fail = 0
 for name in sorted(oracle):
     files = glob.glob(f"{OUT}/{name}/*.parquet")
