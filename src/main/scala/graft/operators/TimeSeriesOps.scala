@@ -42,7 +42,7 @@ object TimeSeriesOps {
     * precondition — see [[islands]]). Zero row-path cost: the count
     * rides Spark's CollectMetrics node during actions the operator
     * already runs, no extra scan and no codegen break. */
-  private def warnNullDrops(obs: Observation, op: String,
+  private[graft] def warnNullDrops(obs: Observation, op: String,
       tsCol: String): Unit = {
     // The observation completes on the listener bus asynchronously,
     // AFTER the operator's internal actions return. In practice it is
@@ -63,7 +63,7 @@ object TimeSeriesOps {
     }(scala.concurrent.ExecutionContext.parasitic)
   }
 
-  private def nullTsMetric(c: Column): Column =
+  private[graft] def nullTsMetric(c: Column): Column =
     sum(when(c.isNull, 1L).otherwise(0L)).as("null_ts")
 
   /** Keyless substrate: the timestamp column as unix micros,
@@ -95,6 +95,37 @@ object TimeSeriesOps {
         (lastPrev, firstNext)
     }.toSeq
 
+  /** Whole-second step between two unix-micros values. */
+  private def stepSec(prevUs: Long, us: Long): Long =
+    Math.floorDiv(us - prevUs, 1000000L)
+
+  /** The A2 boundary stitch: the steps across range-partition
+    * boundaries that no partition sees on its own (see
+    * [[boundaryPairs]]). Added to the per-partition [[DeltaRun]]
+    * histograms they give the histogram of the whole sorted column. */
+  private[graft] def boundaryDeltas(bounds: Array[(Long, Long, Long)])
+      : Seq[Long] =
+    boundaryPairs(bounds).map { case (p, c) => stepSec(p, c) }
+
+  /** The per-partition A2 kernel: fed ascending unix micros, it keeps
+    * the histogram of whole-second steps between successive *distinct*
+    * values plus the first and last value. Skipping equal values is
+    * distinct() semantics, because a range partition holds every copy
+    * of a value. */
+  private[graft] final class DeltaRun {
+    val hist = scala.collection.mutable.LongMap.empty[Long]
+    var first = 0L
+    var last = 0L
+    var nonEmpty = false
+    def add(us: Long): Unit =
+      if (!nonEmpty) { first = us; last = us; nonEmpty = true }
+      else if (us != last) {
+        val d = stepSec(last, us)
+        hist.update(d, hist.getOrElse(d, 0L) + 1L)
+        last = us
+      }
+  }
+
   /** Distributed keyless A2 substrate: histogram of successive
     * first-differences over the *distinct sorted* timestamps, with no
     * single-partition window. One range shuffle; each partition is
@@ -113,18 +144,10 @@ object TimeSeriesOps {
       if (!it.hasNext) Iterator.empty
       else {
         val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-        val h = scala.collection.mutable.LongMap.empty[Long]
-        var prev = it.next(); val first = prev
-        while (it.hasNext) {
-          val c = it.next()
-          if (c != prev) { // distinct() semantics: skip equal values
-            val d = Math.floorDiv(c - prev, 1000000L)
-            h.update(d, h.getOrElse(d, 0L) + 1L)
-            prev = c
-          }
-        }
-        h.iterator.map { case (d, n) => (0, pid, d, n) } ++
-          Iterator((1, pid, first, prev))
+        val run = new DeltaRun
+        it.foreach(run.add)
+        run.hist.iterator.map { case (d, n) => (0, pid, d, n) } ++
+          Iterator((1, pid, run.first, run.last))
       }
     }.toDF("kind", "pid", "a", "b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -132,8 +155,7 @@ object TimeSeriesOps {
       val bounds = partial.filter(col("kind") === 1)
         .select("pid", "a", "b").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val boundary = boundaryPairs(bounds)
-        .map { case (p, c) => (Math.floorDiv(c - p, 1000000L), 1L) }
+      val boundary = boundaryDeltas(bounds).map(d => (d, 1L))
       val hist = partial.filter(col("kind") === 0)
         .select(col("a").as("delta_sec"), col("b").as("n"))
         .unionAll(boundary.toDF("delta_sec", "n"))
@@ -167,7 +189,7 @@ object TimeSeriesOps {
           private def advance(): Unit =
             while (pending == null && it.hasNext) {
               val c = it.next()
-              if (Math.floorDiv(c - prev, 1000000L) > intervalSec)
+              if (stepSec(prev, c) > intervalSec)
                 pending = (0, pid, prev, c)
               prev = c
             }
@@ -185,7 +207,7 @@ object TimeSeriesOps {
         .select("pid", "a", "b").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val boundary = boundaryPairs(bounds).filter { case (p, c) =>
-        Math.floorDiv(c - p, 1000000L) > intervalSec }
+        stepSec(p, c) > intervalSec }
       val out = partial.filter(col("kind") === 0).select("a", "b")
         .unionAll(boundary.toDF("a", "b"))
         .select(

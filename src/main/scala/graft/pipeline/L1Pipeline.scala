@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TableMeta
@@ -96,25 +96,28 @@ object L1Pipeline {
     * the same information content as the netCDF global attributes
     * (title/time coverage/interval). Partition column `year` enables
     * partition pruning for the yearly readers (J4 becomes a plain
-    * partitioned read). */
+    * partitioned read). The time coverage is observed on the write
+    * itself, so the frame's plan runs once. */
   def writeLake(c: Conditioned, tsCol: String, intervalSec: Long,
       outDir: String, site: String): Unit = {
-    val withYear = withQcFlags(c.df, tsCol)
+    val span = Observation()
+    val withYear = withQcFlags(c.df.observe(span,
+        min(col(tsCol)).cast("string").as("start"),
+        max(col(tsCol)).cast("string").as("end")), tsCol)
       .withColumn("year", labelYear(col(tsCol), intervalSec))
     withYear.write.mode("overwrite").partitionBy("year")
       .parquet(s"$outDir/data")
 
-    val span = c.df.agg(min(col(tsCol)).cast("string"),
-      max(col(tsCol)).cast("string")).head()
+    val coverage = span.get
     val attrs = Map(
       "site" -> site,
-      "time_coverage_start" -> span.getString(0),
-      "time_coverage_end" -> span.getString(1),
+      "time_coverage_start" -> coverage("start").asInstanceOf[String],
+      "time_coverage_end" -> coverage("end").asInstanceOf[String],
       "interval_seconds" -> intervalSec.toString,
       "variables" -> c.meta.variables.map(v =>
         s"${v.name}:${v.units}:${v.sampling}").mkString(";"))
     val json = attrs.map { case (k, v) =>
-      "\"" + k + "\": \"" + v.replace("\"", "\\\"") + "\""
+      "\"" + k + "\": \"" + Status.esc(v) + "\""
     }.mkString("{", ", ", "}")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     java.nio.file.Files.write(

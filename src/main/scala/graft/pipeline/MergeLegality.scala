@@ -1,10 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.core.TableMeta
 import graft.operators.TimeSeriesOps
+import graft.operators.TimeSeriesOps.DeltaRun
 
 /** J2 merge-legality analysis (reference:
   * code/file_handling/file_concatenators.py:187-455): before
@@ -40,9 +42,27 @@ object MergeLegality {
       aliases: Seq[Set[String]] = DefaultUnitAliases): Boolean =
     a == b || aliases.exists(g => g.contains(a) && g.contains(b))
 
-  /** Analyse candidate vs master. Interval inference is the A2
-    * operator; the date-contribution test is an anti-join existence
-    * check (one aggregate, no collect of the data). */
+  /** Analyse candidate vs master. The variable and unit checks read
+    * only the catalogs; the three data checks (new dates, master
+    * interval, candidate interval) are one Spark action over the two
+    * timestamp columns, so each side's upstream plan runs once:
+    *
+    *  - both columns, tagged with their side, are range-partitioned on
+    *    unix micros and sorted within partitions by (micros, side);
+    *  - one pass per partition feeds each side's [[DeltaRun]] (the A2
+    *    kernel: distinct-step histogram, first and last value)
+    *    and flags a candidate timestamp with no equal master timestamp.
+    *    Equal values always share a range partition and a master row
+    *    sorts before an equal candidate row, so the flag is exact; a
+    *    null candidate timestamp counts as a new date, as under a
+    *    `left_anti` join;
+    *  - the driver collects those partials (bounded by partitions times
+    *    distinct steps), adds each side's boundary steps
+    *    ([[TimeSeriesOps.boundaryDeltas]]) and takes the mode, ties to
+    *    the smallest step, as [[TimeSeriesOps.inferIntervalSeconds]]
+    *    does. A side with fewer than two distinct timestamps fails the
+    *    same `require`.
+    */
   def analyse(master: DataFrame, masterMeta: TableMeta,
       candidate: DataFrame, candidateMeta: TableMeta,
       tsCol: String,
@@ -58,58 +78,65 @@ object MergeLegality {
       if (unitsEqual(mu, cu, aliases)) None else Some((v, mu, cu))
     }
 
-    // Every data-side check below needs ONLY the timestamp column,
-    // but each action over the raw frames would re-run their whole
-    // upstream plan (the r16 q54 audit measured 26 Spark jobs per
-    // analyse-bearing query, dominated by recomputed aggregation
-    // chains: the anti-join and BOTH interval inferences re-derived
-    // their inputs from scratch). Materialize the two ts projections
-    // once (one row per input row — single-column, so small, but
-    // row-count-sized on dense frames) and let the three checks share
-    // them — UNLESS the caller already materialized the input (a
-    // checkpointed/cached frame under only narrow Project/Filter
-    // steps): re-checkpointing such a frame adds an eager job, a
-    // second copy of the block set, and scheduler latency for zero
-    // saved work (the r17 q61 probe measured exactly this — its
-    // conditioned grids are pre-checkpointed by the caller). The
-    // Report holds only scalars, so any block sets WE created are
-    // released before returning.
-    def prepare(df: DataFrame): (DataFrame, Boolean) = {
-      val ts = df.select(col(tsCol))
-      if (cheapToRecompute(df)) (ts, false)
-      else (ts.localCheckpoint(true), true)
-    }
-    val (mTs, mOwn) = prepare(master)
-    val (cTs, cOwn) = prepare(candidate)
-    try {
-      val newDates = cTs
-        .join(mTs, Seq(tsCol), "left_anti")
-        .limit(1).count() > 0
-
-      val (mInt, _) = TimeSeriesOps.inferIntervalSeconds(mTs, tsCol)
-      val (cInt, _) = TimeSeriesOps.inferIntervalSeconds(cTs, tsCol)
-
-      Report(newDates, mInt == cInt, mInt, cInt, common,
-        mVars.diff(cVars), cVars.diff(mVars), conflicts)
-    } finally {
-      if (mOwn) mTs.unpersist(blocking = false)
-      if (cOwn) cTs.unpersist(blocking = false)
-    }
+    val (newDates, mInt, cInt) = timestampChecks(master, candidate, tsCol)
+    Report(newDates, mInt == cInt, mInt, cInt, common,
+      mVars.diff(cVars), cVars.diff(mVars), conflicts)
   }
 
-  /** True when re-running `df`'s plan per action costs no real work:
-    * every leaf is an already-materialized scan of this session's
-    * memory (a `LogicalRDD`, what `localCheckpoint`/`checkpoint`
-    * leave behind) and every node above the leaves is a narrow
-    * Project/Filter. Matched by class name so no Spark-internal type
-    * leaks into the signature. */
-  private def cheapToRecompute(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-    val plan: LogicalPlan = df.queryExecution.optimizedPlan
-    val nodes = plan.collect { case n => n }
-    nodes.nonEmpty && nodes.forall {
-      case _: Project | _: Filter => true
-      case n => n.children.isEmpty && n.getClass.getSimpleName == "LogicalRDD"
+  private val Master = 0
+  private val Candidate = 1
+
+  /** (contributesNewDates, master interval, candidate interval) in one
+    * collect; see [[analyse]]. Partial rows are (kind, side, pid, a, b):
+    * kind 0 a histogram entry (step a seen b times), kind 1 a partition
+    * boundary (first a, last b), kind 2 the new-date flag. */
+  private def timestampChecks(master: DataFrame, candidate: DataFrame,
+      tsCol: String): (Boolean, Long, Long) = {
+    val spark = master.sparkSession
+    import spark.implicits._
+    def side(df: DataFrame, s: Int): DataFrame =
+      df.select(lit(s).as("side"), unix_micros(col(tsCol)).as("us"))
+    val n = math.max(1, spark.sessionState.conf.numShufflePartitions)
+    val obs = Observation()
+    val partials = side(master, Master)
+      .unionAll(side(candidate, Candidate))
+      .observe(obs, TimeSeriesOps.nullTsMetric(col("us")))
+      .repartitionByRange(n, col("us")).sortWithinPartitions("us", "side")
+      .as[(Int, Option[Long])]
+      .mapPartitions { it =>
+        val pid = TaskContext.getPartitionId().toLong
+        val runs = Array(new DeltaRun, new DeltaRun)
+        var newDate = false
+        it.foreach {
+          case (s, None) => if (s == Candidate) newDate = true
+          case (s, Some(us)) =>
+            val m = runs(Master)
+            if (s == Candidate && !(m.nonEmpty && m.last == us))
+              newDate = true
+            runs(s).add(us)
+        }
+        val flag =
+          if (newDate) Iterator((2, Candidate, pid, 0L, 0L)) else Iterator.empty
+        Iterator(Master, Candidate).filter(runs(_).nonEmpty).flatMap { s =>
+          val r = runs(s)
+          r.hist.iterator.map { case (d, k) => (0, s, pid, d, k) } ++
+            Iterator((1, s, pid, r.first, r.last))
+        } ++ flag
+      }.collect()
+    TimeSeriesOps.warnNullDrops(obs, "MergeLegality.analyse", tsCol)
+
+    def interval(s: Int): Long = {
+      val hist = scala.collection.mutable.LongMap.empty[Long]
+      def add(d: Long, k: Long): Unit =
+        hist.update(d, hist.getOrElse(d, 0L) + k)
+      partials.foreach { case (0, `s`, _, d, k) => add(d, k); case _ => }
+      TimeSeriesOps.boundaryDeltas(partials.collect {
+        case (1, `s`, pid, first, last) => (pid, first, last) })
+        .foreach(add(_, 1L))
+      require(hist.nonEmpty,
+        s"cannot infer interval of '$tsCol': fewer than two distinct timestamps")
+      hist.toSeq.minBy { case (d, k) => (-k, d) }._1
     }
+    (partials.exists(_._1 == 2), interval(Master), interval(Candidate))
   }
 }

@@ -119,7 +119,9 @@ object Status {
     Xlsx.write(path, sheets, StatusFills)
   }
 
-  private def esc(s: String): String =
+  /** JSON string-body escaping: quote, backslash and every control
+    * character. */
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

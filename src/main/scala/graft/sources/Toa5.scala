@@ -34,14 +34,21 @@ object Toa5 {
 
   final case class Parsed(data: DataFrame, meta: TableMeta)
 
-  /** Driver-side header probe (S3/S4/S5): first `headerLines` lines. */
+  /** Driver-side header probe (S3/S4/S5): first `headerLines` lines.
+    * A file that ends inside its header block (an empty file counts as
+    * a TOA5 one) fails with `truncated <format> header`. */
   def probeHeader(path: String): (FileFormat, Seq[String]) = {
     val it = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
     try {
       val head = it.iterator().asScala.take(8).toVector
+      def truncated(fmt: FileFormat) = new IllegalArgumentException(
+        s"truncated ${fmt.name} header in $path: " +
+        s"${head.length} of ${fmt.headerLines} lines")
+      if (head.isEmpty) throw truncated(FileFormat.Toa5)
       val fmt = FileFormat.detect(head.head).getOrElse(
         throw new IllegalArgumentException(
           s"unrecognized format in $path: ${head.head.take(60)}"))
+      if (head.length < fmt.headerLines) throw truncated(fmt)
       (fmt, head.take(fmt.headerLines))
     } finally it.close()
   }
@@ -217,21 +224,22 @@ object Toa5 {
   /** Single-file logger products are driver-assembled by design (a
     * TOA5/EddyPro site-year is ~17.5k rows; byte-stable output needs
     * one ordered writer) — but a misuse with a bulk frame must fail
-    * loudly BEFORE the driver tries to materialize it, not OOM. */
-  private val MaxWriterRows = 2000000L
+    * loudly, not OOM the driver. */
+  private val MaxWriterRows = 2000000
 
+  /** The sorted extract in one action, as `writeNetCdfYear` does: a
+    * limit over the writers' `orderBy` plans as a top-k (or, for a
+    * frame known to be smaller than the cap, as the plain sort), so the
+    * frame is sorted once and the result holds at most
+    * MaxWriterRows + 1 rows; one row over the cap fails the write. */
   private def collectBounded(df: DataFrame, path: String)
       : Array[org.apache.spark.sql.Row] = {
-    // Two jobs on purpose: the count runs WITHOUT materializing rows
-    // on the driver, so a bulk-frame misuse fails loudly before any
-    // multi-GB collect. The duplicated sort only costs legitimate
-    // (<= cap) writes one extra pass over a bounded frame.
-    val n = df.limit((MaxWriterRows + 1).toInt).count()
-    require(n <= MaxWriterRows,
+    val rows = df.limit(MaxWriterRows + 1).collect()
+    require(rows.length <= MaxWriterRows,
       s"refusing to write $path: frame exceeds $MaxWriterRows rows — " +
       "single-file TOA5/EddyPro output is a driver-side artifact; " +
       "write bulk frames to parquet instead")
-    df.collect()
+    rows
   }
 
   /** Numeric rendering: integral doubles without trailing .0 kept as

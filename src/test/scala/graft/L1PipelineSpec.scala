@@ -78,6 +78,23 @@ class L1PipelineSpec extends SparkSpec {
       .contains("TestSite"))
   }
 
+  test("lake attrs.json is valid JSON for any name or unit text (K4)") {
+    val odd = "Ta\\raw \"q\"\nline\u0001"
+    val c = Conditioned(Seq(
+      (ts("2024-01-01 00:30:00"), 1.0),
+      (ts("2024-01-01 01:00:00"), 2.0)).toDF("DATETIME", "Ta"),
+      TableMeta(FileInfo.dummy, Seq(VariableMeta("Ta", odd, "Avg\t"))))
+    val dir = Files.createTempDirectory("lakej").toString
+    L1Pipeline.writeLake(c, "DATETIME", 1800, dir, "Site \"A\"\\B")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Path.of(s"$dir/attrs.json").toFile)
+    assert(json.get("site").asText == "Site \"A\"\\B")
+    assert(json.get("variables").asText == s"Ta:$odd:Avg\t")
+    assert(json.get("time_coverage_start").asText == "2024-01-01 00:30:00")
+    assert(json.get("time_coverage_end").asText == "2024-01-01 01:00:00")
+    assert(json.get("interval_seconds").asText == "1800")
+  }
+
   test("netCDF-3 classic roundtrip: header, attrs, record interleave (K4)") {
     import graft.sources.NetCdf
     import graft.sources.NetCdf._

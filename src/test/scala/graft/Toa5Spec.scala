@@ -106,4 +106,21 @@ class Toa5Spec extends SparkSpec {
     }
     assert(ex.getMessage.contains("ps_Avg"))
   }
+
+  test("header probe names a file cut inside its header block (S4)") {
+    val lines = fixture.split("\r\n").toSeq
+    val dir = Files.createTempDirectory("toa5t")
+    Seq(0, 1, 2).foreach { n =>
+      val f = dir.resolve(s"cut$n.dat")
+      Files.write(f, lines.take(n).map(_ + "\r\n").mkString
+        .getBytes(StandardCharsets.UTF_8))
+      val ex = intercept[IllegalArgumentException](Toa5.probeHeader(f.toString))
+      assert(ex.getMessage == s"truncated TOA5 header in $f: $n of 4 lines")
+    }
+    // a complete header block with no data rows is not truncated
+    val headerOnly = dir.resolve("header.dat")
+    Files.write(headerOnly, lines.take(4).map(_ + "\r\n").mkString
+      .getBytes(StandardCharsets.UTF_8))
+    assert(Toa5.probeHeader(headerOnly.toString)._2.length == 4)
+  }
 }
